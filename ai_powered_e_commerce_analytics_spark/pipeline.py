@@ -121,6 +121,8 @@ def run_etl_pipeline(
         retry_wait_s=cfg.retry_wait_s,
         concurrency=cfg.llm_concurrency,
     )
+    jsc = spark.sparkContext._jsc
+    persisted_before = set(jsc.getPersistentRDDs().keys())
     sentiments = retry_residuals(silver, enrich(silver), enrich)
     gold = gold_join(silver, sentiments).cache()
     try:
@@ -129,6 +131,11 @@ def run_etl_pipeline(
         write_gold_snapshot(gold, gold_dir)
     finally:
         gold.unpersist()
+        # Release what the run pinned (retry_residuals' localCheckpoint):
+        # only ids that appeared during the run, never a caller's.
+        for rid, rdd in jsc.getPersistentRDDs().items():
+            if rid not in persisted_before:
+                rdd.unpersist(False)
     if archive_dir:
         files = [
             r.file

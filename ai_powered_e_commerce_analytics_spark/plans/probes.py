@@ -228,7 +228,9 @@ def executing_scan_census(df: DataFrame) -> dict:
       materialize once per run regardless of reference count).
 
     Returns ``{"executing_scans": n, "cached_relations": n,
-    "scan_sources": {file: n}}``.
+    "scan_sources": {file: n}, "nodes": {class name: n}}``; ``nodes``
+    counts every executing physical node under the same rules (e.g.
+    ``nodes["WindowExec"]`` is the number of windows that run).
     """
     jvm = df.sparkSession._jvm
     plan = df._jdf.queryExecution().executedPlan()
@@ -236,6 +238,7 @@ def executing_scan_census(df: DataFrame) -> dict:
     seen_nodes: set[int] = set()
     scans = 0
     sources: dict[str, int] = {}
+    nodes: dict[str, int] = {}
 
     def children(p):
         seq = p.children()
@@ -248,6 +251,7 @@ def executing_scan_census(df: DataFrame) -> dict:
             return
         seen_nodes.add(oid)
         name = p.getClass().getSimpleName()
+        nodes[name] = nodes.get(name, 0) + 1
         if name == "AdaptiveSparkPlanExec":
             walk(p.executedPlan())
             return
@@ -279,4 +283,5 @@ def executing_scan_census(df: DataFrame) -> dict:
         "executing_scans": scans,
         "cached_relations": len(seen_caches),
         "scan_sources": sources,
+        "nodes": nodes,
     }

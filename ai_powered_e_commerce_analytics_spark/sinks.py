@@ -18,16 +18,20 @@ and PostgREST keyed upserts. Spark-first equivalents:
 - S10 bronze append -> plain JSON append with timestamped subdirs.
 
 Scale notes: the upsert rewrite is partitioned by key-hash bucket so a
-100 TB table only rewrites buckets that received updates; Delta/Iceberg
-MERGE is the production path and noted inline.
+100 TB table only rewrites buckets that received updates, and a full
+rewrite sizes each bucket to one scan split
+(``spark.sql.files.maxPartitionBytes``), so a small table is one file.
+Delta/Iceberg MERGE is the production path and noted inline.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -229,20 +233,47 @@ def _gc_upsert_table(
 
 def _last_writer_wins(new: DataFrame, old: DataFrame, key: str) -> DataFrame:
     """Per-key merge where ``new`` rows beat ``old`` rows (the MERGE
-    matched-update rule), tolerant of schema drift on either side."""
+    matched-update rule), tolerant of schema drift on either side.
+
+    The union is hash-partitioned by ``__bucket`` (a function of the
+    key), so the rank window over ``(__bucket, key)`` and the bucketed
+    write that follows share ONE exchange."""
     return (
         new.withColumn("__rank", F.lit(0))
         .unionByName(
             old.withColumn("__rank", F.lit(1)),
             allowMissingColumns=True,
         )
+        .repartition("__bucket")
         .withColumn(
             "__rn",
-            F.row_number().over(Window.partitionBy(key).orderBy("__rank")),
+            F.row_number().over(
+                Window.partitionBy("__bucket", key).orderBy("__rank")
+            ),
         )
         .where(F.col("__rn") == 1)
         .drop("__rank", "__rn")
     )
+
+
+def _bucket_of(key: str, num_buckets: int):
+    return F.pmod(F.xxhash64(F.col(key)), F.lit(num_buckets)).cast("int")
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """The optimizer's ``sizeInBytes`` for ``df``; no Spark job runs.
+    A plan without statistics (an RDD-backed frame) reports Spark's
+    ``defaultSizeInBytes``, Long.MaxValue."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _sized_bucket_count(spark: SparkSession, table_bytes: int, cap: int) -> int:
+    """The smallest power of two, at most ``cap``, that keeps each bucket
+    at or below ``spark.sql.files.maxPartitionBytes`` — one scan split
+    per bucket file. An unknown estimate (Long.MaxValue) gives ``cap``."""
+    target = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    need = -(-table_bytes // max(int(target), 1))
+    return min(cap, 1 << max(need - 1, 0).bit_length())
 
 
 def _occ_commit_loop(
@@ -267,7 +298,11 @@ def _occ_commit_loop(
     touched bucket whose output dir is absent (every row deleted) is
     dropped from the manifest instead of dangling. ``snapshot``
     localCheckpoints the bucketed change set so all its uses see one
-    deterministic frame."""
+    deterministic frame.
+
+    A commit that rewrites every live bucket re-sizes the layout and
+    re-buckets both sides (rule on :func:`upsert_parquet`); a partial
+    rewrite keeps the manifest's bucket count."""
     from .hadoop import hadoop_fs, hadoop_path
 
     fs = hadoop_fs(spark, table_path)
@@ -286,38 +321,45 @@ def _occ_commit_loop(
 
     for _attempt in range(max_attempts):
         version, manifest = _latest_manifest(spark, fs, table_path)
+        live = manifest["buckets"] if manifest is not None else {}
         nb = int(manifest["num_buckets"]) if manifest is not None else num_buckets
 
-        bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(nb)).cast("int")
-        bucketed = changes.withColumn("__bucket", bucket)
+        bucketed = changes.withColumn("__bucket", _bucket_of(key, nb))
         if snapshot:
             pre = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
             bucketed = bucketed.transform(pin)
             snap_rdd_ids = (
                 set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - pre
             )
-        touched = [r[0] for r in bucketed.select("__bucket").distinct().collect()]
+        touched: set[int] = set()
+        if nb == 1:
+            touched = {0}  # the only bucket takes every key; no job
+        elif live:
+            touched = {
+                r[0] for r in bucketed.select("__bucket").distinct().collect()
+            }
+        full = touched.issuperset(int(b) for b in live)
 
-        old = None
-        if manifest is not None:
-            old_paths = [
-                f"{table_path}/{manifest['buckets'][str(b)]}"
-                for b in touched
-                if str(b) in manifest["buckets"]
-            ]
-            if old_paths:
-                # Bucket dirs are read directly (no partition discovery);
-                # recompute __bucket from the key — same deterministic
-                # hash. mergeSchema + allowMissingColumns = schema
-                # EVOLUTION (see upsert_parquet docstring).
-                old = (
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(*old_paths)
-                    .withColumn(
-                        "__bucket",
-                        F.pmod(F.xxhash64(F.col(key)), F.lit(nb)).cast("int"),
-                    )
-                )
+        # Bucket dirs are read directly (no partition discovery); __bucket
+        # is recomputed from the key — same deterministic hash.
+        # mergeSchema + allowMissingColumns = schema EVOLUTION (see
+        # upsert_parquet docstring).
+        old_paths = [
+            f"{table_path}/{rel}" for b, rel in live.items() if int(b) in touched
+        ]
+        old = (
+            spark.read.option("mergeSchema", "true").parquet(*old_paths)
+            if old_paths
+            else None
+        )
+        if full:
+            est = _plan_bytes(changes) + (0 if old is None else _plan_bytes(old))
+            sized = _sized_bucket_count(spark, est, num_buckets)
+            if sized != nb:
+                nb = sized
+                bucketed = bucketed.withColumn("__bucket", _bucket_of(key, nb))
+        if old is not None:
+            old = old.withColumn("__bucket", _bucket_of(key, nb))
         merged = merge_with_old(bucketed, old)
         txid = uuid.uuid4().hex[:12]
         tx_dir = f"{table_path}/data/tx_{txid}"
@@ -328,15 +370,18 @@ def _occ_commit_loop(
             .parquet(tx_dir)
         )
 
-        buckets = dict(manifest["buckets"]) if manifest is not None else {}
-        for b in touched:
-            rel = f"data/tx_{txid}/__bucket={b}"
-            # A bucket whose every row was deleted writes NO output dir;
-            # its manifest entry must disappear, not dangle.
-            if fs.exists(hadoop_path(spark, f"{table_path}/{rel}")):
-                buckets[str(b)] = rel
-            else:
-                buckets.pop(str(b), None)
+        # A bucket whose every row was deleted writes NO output dir; its
+        # manifest entry must disappear, not dangle. Untouched buckets of
+        # a partial rewrite keep their old tx dirs.
+        written = {
+            s.getPath().getName().split("=", 1)[1]
+            for s in fs.listStatus(hadoop_path(spark, tx_dir))
+            if s.getPath().getName().startswith("__bucket=")
+        }
+        buckets = {} if full else {
+            b: rel for b, rel in live.items() if int(b) not in touched
+        }
+        buckets.update({b: f"data/tx_{txid}/__bucket={b}" for b in written})
         new_manifest = {"num_buckets": nb, "buckets": buckets}
         if _before_commit is not None:
             _before_commit()
@@ -394,6 +439,15 @@ def upsert_parquet(
     in commit order (Delta-style OCC). ``max_attempts`` bounds livelock
     under sustained contention.
 
+    Bucket count: a commit that rewrites every live bucket (the first
+    commit, or updates whose keys hash into every bucket) sizes the
+    layout to the table — the smallest power of two, at most
+    ``num_buckets``, that keeps each bucket at or below
+    ``spark.sql.files.maxPartitionBytes``, estimated from the optimizer's
+    size of the updates plus the old bucket files (no Spark job). An
+    unknown estimate (an RDD-backed frame) gives ``num_buckets``. A
+    partial rewrite keeps the table's bucket count.
+
     ``_before_commit`` is a test seam invoked after staging and before
     each commit attempt (used to interleave a concurrent writer
     deterministically).
@@ -401,9 +455,9 @@ def upsert_parquet(
     100 TB note: this is a miniature of exactly what Delta/Iceberg do
     (immutable data files + atomic metadata pointer + OCC commit). With
     delta-spark on the classpath the body becomes
-    ``DeltaTable.merge(...)`` and gains file-level skipping; the bucket
-    layout below already bounds the rewrite to (touched buckets /
-    num_buckets) of the table.
+    ``DeltaTable.merge(...)`` and gains file-level skipping. Here an
+    update confined to a few keys rewrites only the buckets they hash
+    into, and a bucket is sized to one scan split.
     """
     def merge(bucketed: DataFrame, old: DataFrame | None) -> DataFrame:
         # Last-writer-wins: updates rank before existing rows per key.
@@ -498,10 +552,9 @@ def apply_cdc_parquet(
     bad_marker = F.max(
         F.when(bad_op, F.coalesce(F.col(op_col), F.lit("<NULL>")))
     )
-    # NULL merge keys are rejected alongside the op domain: the delete
-    # path is an anti-JOIN (NULL never matches, so a NULL-key delete
-    # would silently no-op even when a NULL-key row exists), and a NULL
-    # key in a keyed CDC feed is a producer bug, not a mergeable change.
+    # NULL merge keys are rejected alongside the op domain: NULL never
+    # equals a key under MERGE's ``ON t.key = s.key``, and a NULL key in
+    # a keyed CDC feed is a producer bug, not a mergeable change.
     null_key_marker = F.max(F.when(F.col(key).isNull(), F.lit(True)))
     if seq_col is not None:
         diag = (
@@ -537,8 +590,8 @@ def apply_cdc_parquet(
     if diag["__nullk"]:
         raise ValueError(
             f"CDC batch contains a NULL merge key ({key!r}) — refusing "
-            "to apply (deletes anti-join on the key, so a NULL-key "
-            "change can never match and would be silently dropped)"
+            "to apply (a NULL key matches no row, so the change has "
+            "no defined target)"
         )
     if has_dup:
         raise ValueError(
@@ -571,12 +624,13 @@ def apply_cdc_parquet(
         latest = changes
 
     def merge(bucketed: DataFrame, old: DataFrame | None) -> DataFrame:
-        upserts = bucketed.where(F.col(op_col) != "D").drop(op_col)
-        del_keys = bucketed.where(F.col(op_col) == "D").select(key)
-        base = (
-            upserts if old is None else _last_writer_wins(upserts, old, key)
-        )
-        return base.join(del_keys, key, "left_anti")
+        # A delete is a change row like any other: it beats the old row
+        # of its key under last-writer-wins, and the winning deletes are
+        # then dropped (old rows carry a NULL op). The op moves to a
+        # reserved name so a payload column called ``op`` stays data.
+        rows = bucketed.withColumnRenamed(op_col, "__op")
+        winners = rows if old is None else _last_writer_wins(rows, old, key)
+        return winners.where(~F.col("__op").eqNullSafe("D")).drop("__op")
 
     _occ_commit_loop(
         spark,
@@ -587,7 +641,7 @@ def apply_cdc_parquet(
         max_attempts=max_attempts,
         merge_with_old=merge,
         op_name="CDC apply",
-        # one deterministic snapshot feeds upserts, deletes, AND touched
+        # one deterministic snapshot feeds the merge AND touched
         snapshot=True,
         _before_commit=_before_commit,
     )
@@ -732,19 +786,57 @@ def table_changes(
     )
 
 
+#: KPI table -> upsert key (main.py:53-55).
+KPI_KEYS = {"user_kpis": "id", "shop_kpis": "shop_id", "date_kpis": "date"}
+
+
+def _fan_out(commits: dict[str, Callable[[], None]]) -> None:
+    """Run independent table commits concurrently, one
+    ``InheritableThread`` each, so every thread's jobs carry the caller's
+    job group and local properties. Joins all of them, then re-raises
+    the first error in table order; each table commits (or not) on its
+    own."""
+    from pyspark import InheritableThread
+
+    errors: dict[str, BaseException] = {}
+
+    def run(name: str, commit: Callable[[], None]) -> None:
+        try:
+            commit()
+        except BaseException as e:  # noqa: BLE001 - re-raised after join
+            errors[name] = e
+
+    threads = [
+        InheritableThread(target=run, args=(name, commit))
+        for name, commit in commits.items()
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for name in commits:
+        if name in errors:
+            raise errors[name]
+
+
 def upsert_kpi_tables(
     spark: SparkSession,
     kpis: dict[str, DataFrame],
     base_dir: str,
     keys: dict[str, str] | None = None,
 ) -> None:
-    """M2: the reference upserts the three KPI tables concurrently
-    (data_loader.py:63-65); Spark jobs already parallelize internally, so
-    these run sequentially driver-side — table/key triples from
-    main.py:53-55."""
-    keys = keys or {"user_kpis": "id", "shop_kpis": "shop_id", "date_kpis": "date"}
-    for name, df in kpis.items():
-        upsert_parquet(spark, df, f"{base_dir}/{name}", keys[name])
+    """M2: upsert the KPI tables concurrently, as the reference does
+    (data_loader.py:63-65). The commits are independent — each table
+    commits atomically through its own manifest — and each is a chain of
+    small jobs, so running them side by side fills the executor slots
+    one table alone leaves idle."""
+    keys = keys or KPI_KEYS
+    _fan_out({
+        name: functools.partial(
+            upsert_parquet, spark, df, f"{base_dir}/{name}", keys[name]
+        )
+        for name, df in kpis.items()
+    })
 
 
 def upsert_dbapi(
@@ -877,11 +969,14 @@ def upsert_kpi_tables_dbapi(
 ) -> None:
     """M2 twin of :func:`upsert_kpi_tables` targeting a relational DB —
     the reference's actual fan-out (data_loader.py:63-65: three
-    concurrent Supabase upserts). Table/key triples from main.py:53-55;
-    each table's write already parallelizes across executors."""
-    keys = keys or {"user_kpis": "id", "shop_kpis": "shop_id", "date_kpis": "date"}
-    for name, df in kpis.items():
-        upsert_dbapi(spark, df, name, keys[name], connection_factory)
+    concurrent Supabase upserts), with the same concurrent commits."""
+    keys = keys or KPI_KEYS
+    _fan_out({
+        name: functools.partial(
+            upsert_dbapi, spark, df, name, keys[name], connection_factory
+        )
+        for name, df in kpis.items()
+    })
 
 
 def compact_parquet_dir(

@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import pytest
 
+from ai_powered_e_commerce_analytics_spark.hadoop import hadoop_fs
 from ai_powered_e_commerce_analytics_spark.sinks import (
+    _latest_manifest,
     apply_cdc_parquet,
     read_upsert_table,
     upsert_parquet,
@@ -35,6 +37,10 @@ def test_cdc_insert_update_delete(spark, tmp_path):
     )
     apply_cdc_parquet(spark, changes, table, "k", num_buckets=4)
     assert _rows(spark, table) == {(2, "B"), (3, "c"), (9, "z")}
+    # Local-row frames carry no size estimate, so the sizing rule keeps
+    # the requested multi-bucket layout these CDC cases exercise.
+    fs = hadoop_fs(spark, table)
+    assert _latest_manifest(spark, fs, table)[1]["num_buckets"] == 4
 
     # time travel: the pre-CDC version is still readable (one-generation
     # GC retention), and equals the seed.
@@ -116,7 +122,7 @@ def test_cdc_duplicate_keys_without_seq_rejected(spark, tmp_path):
 
 
 def test_cdc_null_key_rejected_both_paths(spark, tmp_path):
-    # A NULL merge key can never match through the delete anti-join, so
+    # A NULL merge key matches no row under MERGE's key equality, so
     # it is rejected up front like an out-of-domain op. Regression: the
     # r7 dup detector read max(when(c>1, key)) which is NULL when the
     # only duplicated group IS the NULL key — a batch of several
@@ -135,7 +141,7 @@ def test_cdc_null_key_rejected_both_paths(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="NULL merge key"):
         apply_cdc_parquet(spark, changes, table, "k", num_buckets=4)
-    # single NULL-key change: rejected too (delete would silently no-op)
+    # single NULL-key change: rejected too
     one = spark.createDataFrame(
         [(None, None, "D")], "k long, v string, op string"
     )

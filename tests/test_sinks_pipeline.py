@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -39,6 +40,48 @@ def _bronze_rows(n, date_prefix="2026-07"):
         }
         for i in range(n)
     ]
+
+
+def _manifest(path, version=None):
+    """Committed manifest ``version`` of an upsert table (the latest when
+    None), read from disk."""
+    name = (
+        sorted(glob.glob(f"{path}/_MANIFEST-v*.json"))[-1]
+        if version is None
+        else f"{path}/_MANIFEST-v{version:08d}.json"
+    )
+    with open(name) as fh:
+        return json.load(fh)
+
+
+def _kv(spark, lo, hi, v):
+    """Rows ``(id, v)`` for ids lo..hi-1. Built on ``range``, so the
+    optimizer knows their size (24 bytes a row) and the sink sizes the
+    bucket layout from it."""
+    return spark.range(lo, hi).select("id", F.lit(float(v)).alias("v"))
+
+
+def _table(spark, path, **kw):
+    return {r.id: r.v for r in read_upsert_table(spark, path, **kw).collect()}
+
+
+@pytest.fixture
+def bucket_target(spark):
+    """``with bucket_target(n):`` sets spark.sql.files.maxPartitionBytes,
+    the upsert's bytes-per-bucket target, to ``n`` so a small table
+    sizes to several buckets on a full rewrite; restored on exit."""
+
+    @contextlib.contextmanager
+    def target(nbytes: int):
+        conf = "spark.sql.files.maxPartitionBytes"
+        prev = spark.conf.get(conf)
+        spark.conf.set(conf, str(nbytes))
+        try:
+            yield
+        finally:
+            spark.conf.set(conf, prev)
+
+    return target
 
 
 def test_upsert_last_writer_wins(spark, tmp_path):
@@ -215,6 +258,15 @@ def test_upsert_concurrent_writers_occ(spark, tmp_path):
     # three committed generations: base(v1), B(v2), A(v3); GC keeps 2.
     versions = sorted(glob.glob(f"{path}/_MANIFEST-v*.json"))
     assert len(versions) == 2 and versions[-1].endswith("v00000003.json")
+    # The B-only bucket premise: local-row frames have no size estimate,
+    # so the table keeps the requested 64 buckets, and key 4's bucket
+    # file is the one B wrote: A's re-merge never rewrote it.
+    v2, v3 = _manifest(path, 2), _manifest(path, 3)
+    kept = {b: rel for b, rel in v3["buckets"].items()
+            if v2["buckets"].get(b) == rel}
+    assert v3["num_buckets"] == 64
+    kept_rows = spark.read.parquet(*[f"{path}/{rel}" for rel in kept.values()])
+    assert 4 in {r.id for r in kept_rows.collect()}
 
 
 def test_upsert_contention_gives_up_bounded(spark, tmp_path):
@@ -300,6 +352,176 @@ def test_upsert_schema_evolution(spark, tmp_path):
         r.id: (r.v, r.tag) for r in read_upsert_table(spark, path).collect()
     }
     assert got[1] == (9.0, None) and got[3] == (30.0, "y")
+
+
+def test_upsert_small_first_commit_is_one_bucket(spark, tmp_path):
+    # 1,000 rows (24 KB estimated) fit one 128 MB split: one bucket, one
+    # file, although the cap is 64.
+    path = str(tmp_path / "kpi10")
+    upsert_parquet(spark, _kv(spark, 0, 1000, 1.0), path, "id")
+    m = _manifest(path)
+    assert m["num_buckets"] == 1 and list(m["buckets"]) == ["0"]
+    assert len(glob.glob(f"{path}/data/tx_*/__bucket=0/*.parquet")) == 1
+    assert _table(spark, path) == {i: 1.0 for i in range(1000)}
+
+
+def test_upsert_full_rewrite_rebuckets(spark, tmp_path, bucket_target):
+    # A 1-bucket table, then a change set hashing into every bucket with
+    # a 2 KB bucket target: the commit re-buckets BOTH sides to the cap,
+    # every row lands in the bucket its key hashes to, one file each.
+    path = str(tmp_path / "kpi11")
+    upsert_parquet(spark, _kv(spark, 0, 1000, 1.0), path, "id")
+    with bucket_target(2048):
+        upsert_parquet(spark, _kv(spark, 500, 1500, 2.0), path, "id", num_buckets=4)
+        m = _manifest(path)
+        assert m["num_buckets"] == 4 and sorted(m["buckets"]) == ["0", "1", "2", "3"]
+        for b, rel in m["buckets"].items():
+            assert len(glob.glob(f"{path}/{rel}/*.parquet")) == 1, rel
+            stray = (
+                spark.read.parquet(f"{path}/{rel}")
+                .where(F.pmod(F.xxhash64("id"), F.lit(4)) != int(b))
+                .count()
+            )
+            assert stray == 0, f"bucket {b} holds {stray} foreign keys"
+        want = {i: 1.0 for i in range(500)} | {i: 2.0 for i in range(500, 1500)}
+        assert _table(spark, path) == want
+
+
+def test_upsert_rebucket_keeps_time_travel(spark, tmp_path, bucket_target):
+    # The 1-bucket version stays readable after the 4-bucket rewrite, and
+    # the change feed diffs the two layouts by key.
+    from ai_powered_e_commerce_analytics_spark.sinks import table_changes
+
+    path = str(tmp_path / "kpi12")
+    upsert_parquet(spark, _kv(spark, 0, 300, 1.0), path, "id")
+    with bucket_target(1024):
+        upsert_parquet(spark, _kv(spark, 200, 400, 2.0), path, "id", num_buckets=4)
+        assert (_manifest(path, 1)["num_buckets"], _manifest(path)["num_buckets"]) == (1, 4)
+        assert _table(spark, path, version=1) == {i: 1.0 for i in range(300)}
+        feed = {
+            r["id"]: r["change_type"]
+            for r in table_changes(spark, path, "id", from_version=1).collect()
+        }
+    assert feed == {i: "update" for i in range(200, 300)} | {
+        i: "insert" for i in range(300, 400)
+    }
+
+
+def test_upsert_cdc_delete_and_occ_retry_across_rebucket(
+    spark, tmp_path, bucket_target
+):
+    # Writer A applies a CDC batch (deletes, updates, inserts) to a
+    # 1-bucket table; writer B steals the version with an upsert that
+    # re-buckets the table. A's retry re-merges against B's 4-bucket
+    # table; the result equals base, then B, then A.
+    from ai_powered_e_commerce_analytics_spark.sinks import apply_cdc_parquet
+
+    path = str(tmp_path / "kpi13")
+    upsert_parquet(spark, _kv(spark, 0, 200, 1.0), path, "id")
+    op = (
+        F.when(F.col("id") < 50, "D")
+        .when(F.col("id") < 100, "U")
+        .otherwise("I")
+    )
+    changes = (
+        spark.range(0, 250)
+        .where((F.col("id") < 100) | (F.col("id") >= 200))
+        .select("id", F.lit(5.0).alias("v"), op.alias("op"))
+    )
+    attempts = []
+
+    def writer_b():
+        attempts.append(1)
+        if len(attempts) == 1:
+            upsert_parquet(spark, _kv(spark, 40, 150, 7.0), path, "id", num_buckets=4)
+
+    with bucket_target(1024):
+        apply_cdc_parquet(
+            spark, changes, path, "id", num_buckets=4, _before_commit=writer_b
+        )
+    assert len(attempts) == 2
+    assert _manifest(path, 2)["num_buckets"] == 4
+    want = (
+        {i: 5.0 for i in range(50, 100)}
+        | {i: 7.0 for i in range(100, 150)}
+        | {i: 1.0 for i in range(150, 200)}
+        | {i: 5.0 for i in range(200, 250)}
+    )
+    assert _table(spark, path) == want
+
+
+def test_upsert_partial_rewrite_keeps_untouched_buckets(
+    spark, tmp_path, bucket_target
+):
+    # One key touches one bucket of four: the count stays 4 (a partial
+    # rewrite is never re-sized) and the other three entries keep their
+    # tx dir.
+    path = str(tmp_path / "kpi14")
+    with bucket_target(2048):
+        upsert_parquet(spark, _kv(spark, 0, 1000, 1.0), path, "id", num_buckets=4)
+        before = _manifest(path)
+        upsert_parquet(spark, _kv(spark, 7, 8, 9.0), path, "id", num_buckets=4)
+    after = _manifest(path)
+    assert before["num_buckets"] == after["num_buckets"] == 4
+    changed = {b for b in after["buckets"] if after["buckets"][b] != before["buckets"][b]}
+    assert len(changed) == 1
+    assert glob.glob(f"{path}/{before['buckets'][next(iter(changed))]}")  # retained
+    assert _table(spark, path) == {i: 1.0 for i in range(1000)} | {7: 9.0}
+
+
+def test_upsert_kpi_tables_concurrent_fanout(spark, tmp_path, monkeypatch):
+    # The three KPI commits run side by side: one failing table does not
+    # stop the other two, the error reaches the caller after all three
+    # finish, and every job the threads start carries the caller's group.
+    import ai_powered_e_commerce_analytics_spark.sinks as sinks
+
+    base = str(tmp_path / "kpis")
+    kpis = {
+        name: spark.range(0, 20).select(
+            F.col("id").cast("string").alias(key), F.lit(1.0).alias("v")
+        )
+        for name, key in sinks.KPI_KEYS.items()
+    }
+    real = sinks.upsert_parquet
+
+    def failing_shop(spark_, df, path, key, **kw):
+        if path.endswith("/shop_kpis"):
+            raise RuntimeError("injected shop_kpis failure")
+        real(spark_, df, path, key, **kw)
+
+    monkeypatch.setattr(sinks, "upsert_parquet", failing_shop)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("kpi-fanout", "KPI fan-out test")
+    try:
+        with pytest.raises(RuntimeError, match="injected shop_kpis"):
+            sinks.upsert_kpi_tables(spark, kpis, base)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup("kpi-fanout")
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    for name in ("user_kpis", "date_kpis"):
+        got = read_upsert_table(spark, f"{base}/{name}").count()
+        assert got == 20, name
+    assert not glob.glob(f"{base}/shop_kpis/_MANIFEST-v*.json")
+
+
+def test_etl_pipeline_releases_persistent_rdds(spark, tmp_path):
+    # retry_residuals pins its enriched frame; the run must not leave
+    # that (or any other) persistent RDD behind.
+    bronze_dir, silver_dir = str(tmp_path / "b"), str(tmp_path / "s")
+    spark.createDataFrame(_bronze_rows(60)).coalesce(1).write.json(bronze_dir)
+    run_review_pipeline(spark, bronze_dir, silver_dir)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    res = run_etl_pipeline(
+        spark, f"{silver_dir}/processed_data_*", str(tmp_path / "g"),
+        str(tmp_path / "k"),
+    )
+    assert res["rows"] == 60
+    left = set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before
+    assert not left, f"run_etl_pipeline left persistent RDDs {left}"
 
 
 def test_silver_chunks_batch_id_replay_idempotent(spark, tmp_path):
